@@ -1,20 +1,9 @@
-"""Pinned-cache registry for two-phase operators.
-
-Several operators cache a range-partitioned frame to PIN its
-``spark_partition_id`` assignment between a per-partition stats collect
-and the final job (the range exchange may re-sample/re-plan between
-jobs, silently pairing rows with the wrong pids otherwise — measured
-~1% wrong asof fills): ``skip_features``' distributed rank,
-``budget_filter``, ``asof_join_distributed``. The pin must stay alive
-until the RETURNED DataFrame has been materialized, so the operator
-cannot unpersist eagerly; without a hook those blocks would occupy
-executor storage memory for the session lifetime (round-2 ADVICE).
-
-``pin_cache`` registers every such frame; call ``release_pins()`` after
-materializing (writing/collecting) the operator output to drop them.
-At storage scale the equivalent is writing the range-partitioned table
-once and reading it for both passes — the pin is a session-local
-stand-in for that materialization.
+"""Pinned-cache registry: ``semantic_dedup`` caches its cluster
+assignment (read three times) and the BPE trainer and segmenter cache
+each merge round or stage (a barrier that bounds codegen depth). A pin
+must outlive the operator, until its returned DataFrame is
+materialized; call ``release_pins()`` then, or the blocks hold executor
+storage for the session. A lost pin only costs a recompute.
 """
 
 from __future__ import annotations
@@ -23,15 +12,7 @@ from pyspark.sql import DataFrame
 
 _PINS: list[DataFrame] = []
 
-# Auto-eviction bound (round-3 ADVICE: long-running sessions that never
-# call release_pins() must not accumulate pinned storage blocks without
-# limit). A pin only needs to survive until its operator's output is
-# materialized; by the time a pin is MAX_PINS operator invocations old
-# that has either happened (the normal flow — each output materializes
-# before the next operator runs) or the plan was abandoned. An evicted
-# pin whose output is materialized LATER anyway loses the pid-pin
-# guarantee — callers interleaving >MAX_PINS deferred two-phase plans
-# must materialize or release explicitly before that depth.
+# sessions that never call release_pins() hold at most MAX_PINS frames
 MAX_PINS = 16
 
 
@@ -57,10 +38,8 @@ def pinned_count() -> int:
 
 def release_pins() -> int:
     """Unpersist every pinned frame; returns how many were released.
-    Safe to call any time AFTER the outputs of the pinning operators
-    have been materialized (unpersisting earlier only costs a recompute
-    with a possibly different pid assignment mid-plan — i.e. wrong
-    results, which is exactly what the pin prevents)."""
+    Meant for after the outputs of the pinning operators have been
+    materialized; releasing earlier only costs a recompute."""
     n = 0
     for df in _PINS:
         try:

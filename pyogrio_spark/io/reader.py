@@ -34,13 +34,15 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from pyogrio_spark.errors import DataLayerError
 from pyogrio_spark.geometry import wkb as W
 from pyogrio_spark.geometry.predicates import PreparedPolygon, batch_intersects, batch_intersects_box
 from pyogrio_spark.index.cover import cover_polygon
+from pyogrio_spark.operators.rank import BUCKET, bucket_offsets, range_bucket, sort_exprs
 
 DEFAULT_RES = 7
 
@@ -239,48 +241,27 @@ def _apply_range(
     explicit [(column, ascending), ...] — used by the ``sql=`` path so
     skip/max ranges follow the statement's ORDER BY (reference
     semantics: ranges apply to the SQL result order)."""
-    if order:
-        order = [(c, asc) for c, asc in order if c in df.columns]
-    order_exprs = (
-        [F.col(c).asc() if asc else F.col(c).desc() for c, asc in order]
-        if order
-        else [F.col(c) for c in _order_cols(df)]
-    )
+    for c, _ in order or ():
+        if c not in df.columns:
+            raise DataLayerError(
+                f"skip_features/max_features follow the sql ORDER BY, but ORDER BY "
+                f"column {c!r} is not in the statement's result; select it"
+            )
+    order = order or _order_cols(df)
     if skip:
-        # distributed global rank (two-phase, same shape as budget_filter):
-        # range-shuffle into ordered partitions, count per partition (one
-        # tiny collect), broadcast the prefix offsets back, rank locally.
-        # Replaces the former Window.orderBy(...) global row_number whose
-        # single-partition sort serialized the whole table through one task.
-        from pyspark.sql import Window
-
-        # pin_cache pins the pid assignment across the counts job and the
-        # final rank job (spark_partition_id is per-job-evaluated); the
-        # pin is tracked — pyogrio_spark.cache.release_pins() frees it
-        # once the result is materialized
-        from pyogrio_spark.cache import pin_cache
-
-        parts = pin_cache(
-            df.repartitionByRange(*order_exprs).withColumn("_pid", F.spark_partition_id())
-        )
-        counts = parts.groupBy("_pid").count().collect()  # one row per partition
-        counts.sort(key=lambda r: r["_pid"])
-        offsets, acc = [], 0
-        for r in counts:
-            offsets.append((r["_pid"], acc))
-            acc += r["count"]
-        off_df = df.sparkSession.createDataFrame(offsets, schema="_pid int, _offset bigint")
-        w = Window.partitionBy("_pid").orderBy(*order_exprs)
+        # distributed global rank (operators/rank.py), never the one-task
+        # global Window.orderBy(...) row_number
+        df = range_bucket(df, order)
+        rank = F.row_number().over(Window.partitionBy(BUCKET).orderBy(*sort_exprs(order)))
         df = (
-            parts.join(F.broadcast(off_df), "_pid")
-            .withColumn("_rn", F.row_number().over(w) + F.col("_offset"))
+            df.withColumn("_rn", rank + bucket_offsets(df, F.lit(1)))
             .filter(F.col("_rn") > skip)
-            .drop("_rn", "_pid", "_offset")
+            .drop("_rn", BUCKET)
         )
     if maxf is not None:
         # sort+limit compiles to TakeOrderedAndProject: per-partition top-M
         # then a single M-row merge — no full global sort
-        df = df.sort(*order_exprs).limit(int(maxf))
+        df = df.sort(*sort_exprs(order)).limit(int(maxf))
     return df
 
 

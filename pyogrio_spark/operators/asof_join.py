@@ -11,21 +11,20 @@ Two plans:
   through one reducer — fine for high-cardinality keys, serial for a
   handful of hot keys.
 - ``asof_join_distributed`` (scale plan for FEW/HOT keys): the
-  two-phase pattern of ``budget_filter`` — range-shuffle the union into
-  contiguous (key, ts) partitions, take each partition's last
+  two-phase rank of ``operators/rank.py`` — cut the union into
+  deterministic (key, ts) range buckets, take each bucket's last
   right-value per key, broadcast the running "carry-in" value back,
-  then fill within partitions in parallel. A single hot key spreads
-  over many range partitions instead of one reducer.
+  then fill within buckets in parallel. A single hot key spreads over
+  many buckets instead of one reducer.
 
-Decision matrix: the carry summary is one row per (partition, key)
-PRESENT — range partitioning keeps keys contiguous so it is
-O(keys + partitions) rows. It stays a DataFrame end-to-end (computed
-with a per-key window over ``_pid`` and broadcast-joined back — no
-driver ``collect()``), so even a high-cardinality key set never
-materializes on the driver. HIGH-cardinality keys are also exactly the
-case where the per-key window plan already parallelizes (millions of
-small groups), so: many keys -> ``asof_join``; few/hot keys -> the
-distributed plan.
+Decision matrix: the carry summary is one row per (bucket, key)
+PRESENT — range buckets keep keys contiguous so it is
+O(keys + buckets) rows. It stays a DataFrame end-to-end (a per-key
+window over ``_bucket``, broadcast-joined back — no driver
+``collect()`` of data), so even a high-cardinality key set never
+materializes on the driver. HIGH-cardinality keys are also exactly the case where the
+per-key window plan already parallelizes (millions of small groups),
+so: many keys -> ``asof_join``; few/hot keys -> the distributed plan.
 
 Tie rule: a right row at exactly left_ts applies (>=), matching
 DuckDB's ASOF JOIN — the engine orders (ts, src) with right rows first
@@ -36,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyogrio_spark.operators.rank import BUCKET, range_bucket
 
 
 def _tag_union(left, right, key_cols, left_ts, right_ts, right_vals):
@@ -85,73 +86,34 @@ def asof_join_distributed(
     right_vals = right_vals or [c for c in right.columns if c not in (*key_cols, right_ts)]
     unioned, lcols = _tag_union(left, right, key_cols, left_ts, right_ts, right_vals)
 
-    sort_cols = [*[F.col(c) for c in key_cols], F.col("_ts"), F.col("_src")]
-    parts = unioned.repartitionByRange(*([num_partitions] if num_partitions else []), *sort_cols)
-    # pin_cache PINS the partition-id assignment: spark_partition_id() is
-    # re-evaluated per job, and the range exchange may re-sample/re-plan
-    # between the carry collect and the final fill, silently shifting
-    # rows to different pids than their carry rows (measured: ~1% wrong
-    # fills without the pin). At storage scale the equivalent is writing
-    # the range-partitioned table once and reading it for both passes.
-    # Tracked: pyogrio_spark.cache.release_pins() frees it afterwards.
-    from pyogrio_spark.cache import pin_cache
-
-    parts = pin_cache(parts.withColumn("_pid", F.spark_partition_id()))
-
-    # per-(partition, key) summary over ALL rows of the key (left rows
-    # carry NULL right_vals in the union, so last(ignorenulls) still
-    # yields the partition's last right value): one row per (pid, key)
-    # group PRESENT in the data. Keeping presence rows (not just
-    # right-row groups) is what makes the carry correct for left rows in
-    # partitions beyond the key's last right row — a hot key whose
-    # events continue long after its last rate row still gets a carry
-    # row in every later partition it occupies.
-    w_last = Window.partitionBy("_pid", *key_cols).orderBy("_ts", "_src").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    # one explicit exchange that the summary and the fill both consume,
+    # so the two branches share it instead of re-reading the input
+    parts = range_bucket(unioned, [*key_cols, "_ts", "_src"], num_partitions).repartition(
+        BUCKET, *key_cols
     )
-    lasts = (
-        parts.select(
-            "_pid", *key_cols,
-            *[F.last(v, ignorenulls=True).over(w_last).alias(v) for v in right_vals],
-            F.max(F.when(F.col("_src") == 0, 1).otherwise(0)).over(w_last).alias("_has_right"),
-            F.row_number().over(
-                Window.partitionBy("_pid", *key_cols).orderBy(F.desc("_ts"), F.desc("_src"))
-            ).alias("_rn"),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+
+    # per-(bucket, key) summary: each right column's last non-NULL value
+    # in (ts, src) order, one row per (bucket, key) PRESENT — left-only
+    # buckets included, so a key's left rows long after its last right
+    # row still get a carry in every later bucket.
+    order = F.struct("_ts", "_src")
+    lasts = parts.groupBy(BUCKET, *key_cols).agg(
+        *[F.max_by(v, F.when(F.col(v).isNotNull(), order)).alias(v) for v in right_vals]
     )
-    # running carry-in per key, as a DataFrame (no driver collect): for
-    # each (pid, key) summary row, the carry-in is — per VALUE column —
-    # the last non-null value among STRICTLY-PRECEDING partitions'
-    # right-bearing summaries. `when(_has_right, v)` nulls out
-    # left-only presence rows so they are transparent to
-    # last(ignorenulls); the per-value form mirrors the in-partition
-    # fill (a right row with one NULL value must not erase an earlier
-    # partition's non-null carry for that value). The window groups are
-    # tiny by construction: one row per partition the key occupies,
-    # contiguous under range partitioning — O(keys + partitions) rows
-    # total, shuffled once on key and broadcast back.
-    w_carry = Window.partitionBy(*key_cols).orderBy("_pid").rowsBetween(
+    # carry-in per key, as a DataFrame (no driver collect): per VALUE
+    # column, the last non-NULL summary value of STRICTLY-PRECEDING
+    # buckets, so a right row with one NULL value does not erase an
+    # earlier carry for it. O(keys + buckets) rows, broadcast back.
+    w_carry = Window.partitionBy(*key_cols).orderBy(BUCKET).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    carry_cols = [
-        F.last(F.when(F.col("_has_right") == 1, F.col(v)), ignorenulls=True)
-        .over(w_carry)
-        .alias(f"_c_{v}")
-        for v in right_vals
-    ]
-    carry = lasts.select("_pid", *key_cols, *carry_cols)
-    # all-null carry rows are no-ops under coalesce; drop them to keep
-    # the broadcast minimal.
-    keep_any = F.lit(False)
-    for v in right_vals:
-        keep_any = keep_any | F.col(f"_c_{v}").isNotNull()
-    carry = carry.filter(keep_any)
+    carry = lasts.select(
+        BUCKET, *key_cols, *[F.last(v, ignorenulls=True).over(w_carry).alias(f"_c_{v}") for v in right_vals]
+    ).dropna(how="all", subset=[f"_c_{v}" for v in right_vals])
 
-    w = Window.partitionBy("_pid", *key_cols).orderBy("_ts", "_src").rowsBetween(Window.unboundedPreceding, 0)
+    w = Window.partitionBy(BUCKET, *key_cols).orderBy("_ts", "_src").rowsBetween(Window.unboundedPreceding, 0)
     filled = (
-        parts.join(F.broadcast(carry), ["_pid", *key_cols], "left")
+        parts.join(F.broadcast(carry), [BUCKET, *key_cols], "left")
         .select(
             "*",
             *[

@@ -4,17 +4,11 @@ a defined order until a cumulative token budget is reached.
 The obvious plan — ``sum(tokens) over (partition by lang order by ...)``
 — funnels each group through ONE reducer task: with 3 languages over a
 100-TB corpus that is 3 tasks doing all the work. ``budget_filter``
-therefore implements the classic two-phase distributed prefix sum:
-
-1. ``repartitionByRange(group, order)`` — range shuffle puts each
-   group's rows in contiguous, *ordered* partitions (AQE-sized);
-2. per-partition cumulative sums run in parallel via a window over
-   ``(partition_id, group)`` — each partition is its own window, so
-   every task works concurrently (all JVM, codegen);
-3. a tiny ``groupBy(partition_id, group).sum`` aggregate (one row per
-   partition x group) is collected, turned into per-partition *prefix
-   offsets* on the driver, and broadcast-joined back;
-4. keep rows whose global running total starts inside the budget.
+therefore runs the two-phase distributed prefix sum of
+``operators/rank.py``: ordered (group, order) range buckets, so a hot
+group spreads over many buckets; per-bucket cumulative sums in parallel
+over ``(_bucket, group)`` plus the literal prefix offset of the group's
+earlier buckets; keep rows whose running total starts inside the budget.
 
 ``budget_filter_window`` (the one-reducer-per-group plan) is kept as
 the semantic reference; tests assert both produce identical rows.
@@ -27,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyogrio_spark.operators.rank import BUCKET, bucket_offsets, range_bucket
 
 
 def budget_filter_window(
@@ -57,34 +53,8 @@ def budget_filter(
     (group, *order_cols) order *starts* below the budget — a document
     straddling the boundary is kept whole (first-fit semantics).
     """
-    sort_cols = [F.col(group_col), *[F.col(c) for c in order_cols]]
-    parts = df.repartitionByRange(*([num_partitions] if num_partitions else []), *sort_cols)
-    # pin_cache pins the pid assignment across the two jobs (the totals
-    # collect and the final filter): spark_partition_id() is evaluated
-    # per job and the range exchange may re-plan between them. Tracked:
-    # pyogrio_spark.cache.release_pins() frees it after materialization.
-    from pyogrio_spark.cache import pin_cache
-
-    parts = pin_cache(parts.withColumn("_pid", F.spark_partition_id()))
-
-    # per-(partition, group) totals: tiny — one row per partition x group
-    totals = parts.groupBy("_pid", group_col).agg(F.sum(value_col).alias("_part_sum")).collect()
-    totals.sort(key=lambda r: (r[group_col], r["_pid"]))
-    offsets, acc = [], {}
-    for r in totals:
-        g = r[group_col]
-        offsets.append((r["_pid"], g, acc.get(g, 0)))
-        acc[g] = acc.get(g, 0) + r["_part_sum"]
-    spark = df.sparkSession
-    gtype = df.schema[group_col].dataType.simpleString()
-    off_df = spark.createDataFrame(offsets, schema=f"_pid int, {group_col} {gtype}, _offset bigint")
-
-    # local (parallel) cumsum within each partition x group + global offset
-    w = Window.partitionBy("_pid", group_col).orderBy(*[F.col(c) for c in order_cols])
-    cum = F.sum(value_col).over(w) + F.col("_offset")
-    out = (
-        parts.join(F.broadcast(off_df), ["_pid", group_col])
-        .withColumn("_cum", cum)
-        .filter(F.col("_cum") - F.col(value_col) < budget)
-    )
-    return out.drop("_pid", "_offset", "_cum")
+    parts = range_bucket(df, [group_col, *order_cols], num_partitions)
+    w = Window.partitionBy(BUCKET, group_col).orderBy(*[F.col(c) for c in order_cols])
+    cum = F.sum(value_col).over(w) + bucket_offsets(parts, value_col, by=(group_col,))
+    out = parts.withColumn("_cum", cum).filter(F.col("_cum") - F.col(value_col) < budget)
+    return out.drop(BUCKET, "_cum")

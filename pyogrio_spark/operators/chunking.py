@@ -17,7 +17,9 @@ exactly one chunk. ``n_chunks = max(1, ceil((n - c) / s) + 1)``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
+
+from pyogrio_spark.operators.rank import BUCKET, bucket_offsets, range_bucket
 
 
 def chunk_documents(
@@ -105,46 +107,25 @@ def pack_chunks_global(
     distributed.
 
     A naive global ``row_number`` puts the whole corpus through ONE
-    window task; instead this uses the engine's two-phase rank: range
-    partition + local sort (the only real shuffle), per-partition
-    counts (a partitions-sized aggregate), broadcast the cumulative
-    offsets back, and compute ``global_idx = local row_number +
-    partition offset`` — every stage is partition-parallel and the
-    driver never touches row data. The repartitioned frame is cached
-    before the counts job: ``spark_partition_id`` is re-evaluated per
-    job, so the two jobs must see the identical physical partitioning
-    (see BENCH notes).
+    window task; instead ``global_idx`` is the row number within a
+    literal range bucket plus the bucket's literal offset (the two-phase
+    rank of ``operators/rank.py``): one hash exchange, every stage
+    partition-parallel.
 
     Adds ``global_idx`` and overwrites ``pack_id`` with the global
     assignment; every pack is within budget for the same reason as
     ``pack_chunks`` (chunks never exceed ``chunk_tokens``).
     """
-    from pyspark.sql import Window
-
-    from pyogrio_spark.cache import pin_cache
-
     if budget_tokens < chunk_tokens:
         raise ValueError(
             f"budget_tokens ({budget_tokens}) must be >= chunk_tokens ({chunk_tokens})"
         )
     m = budget_tokens // chunk_tokens
     cols = list(order_cols)
-    ordered = pin_cache(
-        chunks.drop("pack_id")
-        .repartitionByRange(*cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    counts = ordered.groupBy("_pid").count()
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.withColumn(
-        "_off", F.coalesce(F.sum("count").over(w_off), F.lit(0))
-    ).drop("count")
-    w_local = Window.partitionBy("_pid").orderBy(*cols)
-    out = (
-        ordered.join(F.broadcast(offs), "_pid")
-        .withColumn("global_idx", F.row_number().over(w_local) - 1 + F.col("_off"))
+    parts = range_bucket(chunks.drop("pack_id"), cols)
+    rank = F.row_number().over(Window.partitionBy(BUCKET).orderBy(*cols))
+    return (
+        parts.withColumn("global_idx", rank - 1 + bucket_offsets(parts, F.lit(1)))
         .withColumn("pack_id", (F.col("global_idx") / F.lit(m)).cast("bigint"))
-        .drop("_pid", "_off")
+        .drop(BUCKET)
     )
-    return out

@@ -170,6 +170,10 @@ def tokenize_greedy(
     head_df = wcounts.orderBy(F.desc("_wn"), "word").limit(int(head_words)).select("word")
     seg_head = seg.join(F.broadcast(head_df), "word")
     matched = words.join(F.broadcast(seg_head), "word")
+    if wcounts.count() <= head_words:
+        # no tail: an empty tail branch raced AQE (empty-relation pruning
+        # vs broadcast conversion), varying the job count run to run
+        return matched.select(id_col, "word_idx", "tok_pos", "token")
     tail_words = words.join(F.broadcast(head_df), "word", "left_anti")
     tail = tail_words.join(seg, "word")
     return matched.unionByName(tail).select(id_col, "word_idx", "tok_pos", "token")

@@ -1083,8 +1083,8 @@ SELECT doc_id, token, tf, df, tfidf, rnk FROM scored WHERE rnk <= 5
 
 def q_chunk_pack_global(spark, sf):
     """Cross-document global packing (operators/chunking.py
-    pack_chunks_global): two-phase distributed rank — range shuffle,
-    partition-local row_number + broadcast offsets; no corpus-sized
+    pack_chunks_global): two-phase distributed rank — literal range
+    buckets, per-bucket row_number + literal offsets; no corpus-sized
     single window task."""
     from pyogrio_spark.operators.chunking import chunk_documents, pack_chunks_global
 

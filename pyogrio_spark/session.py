@@ -20,7 +20,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core keeps every stage

@@ -10,7 +10,7 @@ OGRSQL operator subset and the reference's canonical Spatialite
 spatial-join example:
 
 * ``OGRSQL`` — ``SELECT [DISTINCT] <list> FROM <layer> [WHERE ...]
-  [ORDER BY ...] [LIMIT n]`` with ``= <> != < > <= >= IN BETWEEN
+  [ORDER BY ...] [LIMIT n [OFFSET m]]`` with ``= <> != < > <= >= IN BETWEEN
   LIKE IS [NOT] NULL AND OR NOT``, arithmetic, and the summary
   aggregates ``COUNT/MIN/MAX/SUM/AVG``. Divergences from Spark SQL
   that the translator normalizes:
@@ -38,8 +38,10 @@ spatial-join example:
   (cell-cover equi-join + exact refine + one aggregation) — the
   100 TB plan for what GDAL executes as an O(n²) nested loop.
   Statements with no spatial function run as Spark SQL against the
-  layer registered under its own name (SQLITE core SQL is close
-  enough to ANSI for the documented subset). Any other Spatialite
+  layer: the FROM/JOIN table tokens naming it are pointed at an
+  internal view (string literals untouched, no view registered under
+  the user-visible layer name); SQLITE core SQL is close enough to
+  ANSI for the documented subset. Any other Spatialite
   function raises ``DataLayerError`` naming it (documented
   divergence).
 
@@ -313,10 +315,10 @@ def translate_ogrsql(
     # --- LIMIT
     limit_sql = ""
     if "LIMIT" in pos:
-        lim = toks[pos["LIMIT"] + 1 : pos["LIMIT"] + 2]
-        if not lim or not lim[0].isdigit():
-            raise DataLayerError("SQL Expression Parsing Error: LIMIT expects an integer")
-        limit_sql = f" LIMIT {int(lim[0])}"
+        lim = re.fullmatch(r"(\d+)(?: OFFSET (\d+))?", " ".join(toks[pos["LIMIT"] + 1 :]), re.I)
+        if not lim:
+            raise DataLayerError("SQL Expression Parsing Error: expected LIMIT n [OFFSET m] at the end")
+        limit_sql = f" LIMIT {int(lim[1])}" + (f" OFFSET {int(lim[2])}" if lim[2] else "")
 
     stmt = (
         f"SELECT {'DISTINCT ' if distinct else ''}{', '.join(sel_sql)} "
@@ -370,6 +372,14 @@ def _neighbor_counts(df: DataFrame, key: str, geometry_col: str, alias: str) -> 
     return df.join(counts, key, "left").fillna({alias: 0})
 
 
+def _substitute_table(sql: str, layer_name: str, view: str) -> str:
+    """Point the FROM/JOIN tokens naming the layer (bare or quoted) at
+    ``view``; string literals are skipped whole."""
+    name = re.escape(layer_name)
+    pat = rf"""('(?:[^'\\]|\\.|'')*')|\b(FROM|JOIN)(\s+)(?:"{name}"|`{name}`|{name}(?!\w))"""
+    return re.sub(pat, lambda m: m[1] or m[2] + m[3] + view, sql, flags=re.I)
+
+
 def _apply_sqlite(
     spark: SparkSession,
     df: DataFrame,
@@ -401,8 +411,7 @@ def _apply_sqlite(
         work = work.withColumnRenamed(geometry_col, "geometry")
     view = f"pyogrio_sqlite_{abs(hash(layer_name)) % 10**8}"
     work.createOrReplaceTempView(view)
-    work.createOrReplaceTempView(layer_name)
-    out = spark.sql(re.sub(rf"\b{re.escape(layer_name)}\b", view, out_sql, flags=re.I))
+    out = spark.sql(_substitute_table(out_sql, layer_name, view))
     if renamed and "geometry" in out.columns:
         out = out.withColumnRenamed("geometry", geometry_col)
     return out

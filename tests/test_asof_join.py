@@ -127,7 +127,7 @@ def test_asof_distributed_no_single_partition_exchange(spark, frames):
     out = asof_join_distributed(l, r, ["key"], left_ts="ts", right_ts="rts", right_vals=["rate"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
-    assert "rangepartitioning" in plan.lower()
+    assert "hashpartitioning(_bucket" in plan
 
 
 def test_asof_distributed_operator_has_no_driver_collect():

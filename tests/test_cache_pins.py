@@ -1,28 +1,31 @@
-"""Pinned-cache registry: two-phase operators pin a range-partitioned
-frame for pid stability; release_pins() must free every one (round-2
+"""Pinned-cache registry: semantic_dedup pins its cluster assignment
+(read three times); release_pins() must free every pin (round-2
 ADVICE: the pins used to leak executor storage for the session)."""
 
-import pandas as pd
+import numpy as np
 
 from pyogrio_spark import release_pins
 from pyogrio_spark.cache import pinned_count
-from pyogrio_spark.operators.budget import budget_filter
+from pyogrio_spark.operators.similarity import make_centroids, semantic_dedup
 
 
-def test_release_pins_frees_budget_pin(spark):
+def test_release_pins_frees_semantic_dedup_pin(spark):
     release_pins()  # start clean
     # other modules legitimately hold session-lifetime caches (query
     # fixtures, checkpoints pending GC) — assert against a snapshot, not
     # global emptiness, so the check is order-independent
     before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    # 10 random directions, each repeated 10 times: every copy after the
+    # lowest key is an exact duplicate (cosine 1), distinct directions in
+    # 16-d are far below the threshold
+    dirs = np.random.default_rng(5).normal(0, 1, (10, 16))
     df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(100), "grp": [i % 3 for i in range(100)],
-                      "token_count": [10] * 100}),
-        schema="doc_id long, grp long, token_count long",
+        [(i, [float(x) for x in dirs[i % 10]]) for i in range(100)],
+        "vec_id bigint, embedding array<float>",
     )
-    out = budget_filter(df, budget=100, group_col="grp")
+    out = semantic_dedup(df, make_centroids(16, 4), threshold=0.99)
     n = out.count()  # materialize while the pin is alive
-    assert n == 30  # 10 docs x 10 tokens per group
+    assert n == 10  # one kept row per direction
     assert pinned_count() >= 1
     released = release_pins()
     assert released >= 1 and pinned_count() == 0

@@ -100,8 +100,10 @@ def test_budget_filter_is_jvm_only(spark, docs_parquet):
                         group_col="grp", value_col="v", order_cols=("doc_id",), num_partitions=8)
     plan = plan_of(out)
     assert "Python" not in plan and "MapInPandas" not in plan
-    # broadcast of the tiny offset table, range shuffle of the stream
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    # offsets are plan literals: no offset-table join, one hash exchange
+    # on the literal range bucket
+    assert "Join" not in plan
+    assert "hashpartitioning(_bucket" in plan
 
 
 def test_hash_split_adds_no_shuffle(spark, docs_parquet):
@@ -127,12 +129,12 @@ def test_intersects_join_full_branch_has_no_python(spark):
 
 
 def test_skip_features_has_no_single_partition_exchange(spark, docs_parquet):
-    # distributed skip: range repartition + per-partition rank + broadcast
+    # distributed skip: literal range buckets + per-bucket rank + literal
     # offsets — never a SinglePartition global-window exchange
     df = read_table(spark, docs_parquet, skip_features=100, read_geometry=False)
     plan = plan_of(df)
     assert "SinglePartition" not in plan, "skip_features fell back to the one-reducer global window"
-    assert "rangepartitioning" in plan.lower()
+    assert "hashpartitioning(_bucket" in plan
     # correctness: same rows as the semantic-reference global window
     from pyspark.sql import Window, functions as F
 
